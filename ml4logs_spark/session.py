@@ -5,6 +5,10 @@ to ``spark-submit`` on a real cluster (see BENCH/BASELINE.md). AQE is on so
 skewed conversation joins re-plan at runtime; explicit salting is still done
 in operators/route.py because the north rule requires skew handling to be
 explicit, not AQE-only.
+
+Shuffle partitions default to the core count (``defaultParallelism``), which
+streaming checkpoints pin at first start; AQE already coalesces batch shuffles,
+so batch plans barely change. ``bench.py`` and the tests pass their own counts.
 """
 
 from __future__ import annotations
@@ -12,8 +16,6 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
-
-DEFAULT_SHUFFLE_PARTITIONS = 32
 
 
 def get_spark(
@@ -30,21 +32,18 @@ def get_spark(
     if cores is None:
         cores = os.environ.get("SPARK_GRAFT_CPUS", "*")
     master = cores if isinstance(cores, str) and cores.startswith(("local", "spark:")) else f"local[{cores}]"
-    sp = shuffle_partitions or int(os.environ.get("ML4S_SHUFFLE_PARTITIONS", DEFAULT_SHUFFLE_PARTITIONS))
+    sp = shuffle_partitions or os.environ.get("ML4S_SHUFFLE_PARTITIONS")
     b = (
         SparkSession.builder.master(master)
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(sp))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        # AQE partition-coalescing policy, env-overridable. The default
-        # stays parallelismFirst=true (Spark's own): size-based
-        # coalescing (=false) was measured to collapse join-EXPLOSION
-        # stages — small input bytes, millions of output pairs (the
-        # simhash hamming probe: 8.9s -> 27.5s) — onto one task, because
-        # AQE sizes partitions by input bytes, not output compute.
-        # Clusters processing TB-scale shuffles should flip it to false
-        # per the Spark tuning guide ("respect the advisory size").
+        # AQE coalescing keeps Spark's parallelismFirst=true (env-overridable):
+        # size-based coalescing (=false) collapsed join-EXPLOSION stages (small
+        # input, millions of output pairs; simhash hamming probe 8.9s -> 27.5s)
+        # onto one task, because AQE sizes partitions by input bytes, not output
+        # compute. TB-scale shuffles should flip it to false per the Spark
+        # tuning guide ("respect the advisory size").
         .config(
             "spark.sql.adaptive.coalescePartitions.parallelismFirst",
             os.environ.get("ML4S_COALESCE_PARALLELISM_FIRST", "true"),
@@ -64,5 +63,6 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     spark = b.getOrCreate()
+    spark.conf.set("spark.sql.shuffle.partitions", str(sp or spark.sparkContext.defaultParallelism))
     spark.sparkContext.setLogLevel("WARN")
     return spark

@@ -61,12 +61,19 @@ def make_batch_ingester(
     ``bands/`` and ``codes/`` (one ``batch=<id>`` partition per batch),
     ``pairs/`` (verified near-dup pairs), ``_batch_<id>`` commit
     markers."""
+    from ml4logs_spark import cache
     from ml4logs_spark.operators import similarity
 
     root = Path(state_dir)
     root.mkdir(parents=True, exist_ok=True)
 
     def _ingest(bdf: DataFrame, batch_id: int) -> None:
+        # the incremental probe tracks a persist per batch; release it
+        # with the batch so a long-running query holds none of them
+        with cache.scope():
+            _ingest_batch(bdf, batch_id)
+
+    def _ingest_batch(bdf: DataFrame, batch_id: int) -> None:
         marker = root / f"_batch_{batch_id}"
         if marker.exists():  # replayed batch: already committed
             return

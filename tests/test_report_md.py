@@ -75,6 +75,26 @@ def test_report_collates_all_sections(tmp_path):
     assert "no weak_scaling.json yet" in report
 
 
+def test_report_reads_wrapped_records_and_picks_round_records(tmp_path):
+    """Round bench records wrap bench.py's JSON under ``parsed``, and a
+    round's suffixed side records (``_frozen``) never outrank its plain
+    record, nor does an older round outrank a newer one numerically."""
+    def bench(name, tps):
+        with open(tmp_path / name, "w") as f:
+            json.dump({"rc": 0, "parsed": {
+                "turns_per_sec": tps, "value": 2.0, "sf": 0.1,
+                "cores": "32", "queries": {"e2e_pipeline": 2.0},
+            }}, f)
+
+    bench("BENCH_r9.json", 1.0)
+    bench("BENCH_r10.json", 10.0)
+    bench("BENCH_r10_frozen.json", 99.0)
+    assert report_md._sources(str(tmp_path)) == ["BENCH_r10.json"]
+    report = report_md.build_report(str(tmp_path))
+    assert "**10.0 turns/s**" in report and "local[32]" in report
+    assert "| e2e_pipeline | 2.0 |" in report
+
+
 def test_report_degrades_gracefully_on_empty_repo(tmp_path):
     report = report_md.build_report(str(tmp_path))
     assert "no manifest found" in report

@@ -133,3 +133,21 @@ def test_redelivered_batch_under_new_id_is_deduped(spark, emb_batches, tmp_path)
     ingest(spark.read.parquet(emb_batches + "/b2"), 99)  # fresh id, same rows
     assert spark.read.parquet(str(state / "codes")).count() == n_codes
     assert spark.read.parquet(str(state / "pairs")).count() == n_pairs
+
+
+def test_streaming_ingest_releases_its_persists(spark, emb_batches, tmp_path):
+    """Every micro-batch with history runs the incremental probe, which
+    tracks a persisted candidate frame; the ingest must release it with
+    the batch, or a long-running query accumulates one cached frame per
+    micro-batch."""
+    from ml4logs_spark import cache
+
+    # clean baseline: earlier tests may leave tracked persists
+    cache.release_all()
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    before = persistent().size()
+    state = _run(spark, emb_batches, tmp_path, "e")
+    # four micro-batches drained, three of them probed history
+    assert len(list(Path(state).glob("_batch_*"))) == 4
+    assert cache._TRACKED == []
+    assert persistent().size() == before

@@ -161,3 +161,50 @@ def test_extract_latencies_split_invariance_property():
     for k in range(3):
         for cuts in itertools.combinations(range(1, len(rows)), k):
             assert run_split(rows, list(cuts)) == want, f"cuts={cuts}"
+
+
+def test_latency_checkpoint_keeps_its_partition_count(spark, turns, tmp_path):
+    """A streaming checkpoint pins the shuffle partition count at first
+    start: state written at 8 partitions must resume intact after the
+    session's count changes (the default follows the core count)."""
+    import shutil
+
+    from ml4logs_spark.operators import windows
+    from ml4logs_spark.streaming import latency, stream_pipeline as sp
+
+    staged, in_dir = tmp_path / "staged", tmp_path / "stream_in"
+    turns.repartitionByRange(6, "turn_idx").write.parquet(str(staged))
+    parts = sorted(staged.glob("part-*"))
+    in_dir.mkdir()
+    ckpt, state = tmp_path / "ckpt", str(tmp_path / "state")
+
+    def drain(files):
+        for p in files:
+            shutil.copy(p, in_dir / p.name)
+        sp.stamp_file_order(str(in_dir))
+        q = latency.run_latency_ingest(
+            sp.stream_transcripts(spark, str(in_dir)),
+            state_dir=state, checkpoint_dir=str(ckpt),
+        )
+        q.awaitTermination()
+        q.stop()
+
+    assert spark.conf.get("spark.sql.shuffle.partitions") == "8"
+    drain(parts[:3])  # day 1 creates the checkpoint at 8 partitions
+    try:
+        spark.conf.set("spark.sql.shuffle.partitions", "3")
+        drain(parts[3:])  # day 2 resumes on new turn files
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", "8")
+
+    got = latency.read_latency_state(spark, state).toPandas()
+    want = windows.tool_latency_histogram_state(turns).toPandas()
+    key = ["tool", "bucket_lo"]
+    pd.testing.assert_frame_equal(
+        got.sort_values(key).reset_index(drop=True),
+        want.sort_values(key).reset_index(drop=True),
+        check_dtype=False,
+    )
+    # one state-store directory per pinned partition (plus _metadata)
+    pinned = {p.name for p in (ckpt / "state" / "0").iterdir()}
+    assert pinned - {"_metadata"} == {str(i) for i in range(8)}

@@ -24,6 +24,7 @@ import argparse
 import glob
 import json
 import os
+import re
 
 
 def _table(headers: list[str], rows: list[list]) -> str:
@@ -34,9 +35,18 @@ def _table(headers: list[str], rows: list[list]) -> str:
     return "\n".join(out)
 
 
-def _latest(repo: str, pattern: str) -> str | None:
-    hits = sorted(glob.glob(os.path.join(repo, pattern)))
-    return hits[-1] if hits else None
+def _latest(repo: str, kind: str, tracked: set[str] | None = None) -> str | None:
+    """The round record ``<kind>_r<N>.json`` with the highest round N.
+    Suffixed files (``BENCH_r06_frozen.json``, ``_control``) are side
+    records of a round, never its record; ``tracked`` optionally
+    restricts candidates to these file names."""
+    rounds = []
+    for path in glob.glob(os.path.join(repo, f"{kind}_r*.json")):
+        name = os.path.basename(path)
+        m = re.fullmatch(rf"{kind}_r(\d+)\.json", name)
+        if m and (tracked is None or name in tracked):
+            rounds.append((int(m[1]), path))
+    return max(rounds)[1] if rounds else None
 
 
 def manifest_section(manifest_path: str | None) -> str:
@@ -95,6 +105,8 @@ def bench_section(path: str | None) -> str:
         return "_no BENCH_r*.json yet_"
     with open(path) as f:
         b = json.load(f)
+    # round records wrap bench.py's JSON line under "parsed"
+    b = b.get("parsed") or b
     parts = [
         f"**{b.get('turns_per_sec', '?')} turns/s** end-to-end at "
         f"sf={b.get('sf', '?')} on local[{b.get('cores', '?')}] — total "
@@ -158,14 +170,8 @@ def _sources(repo: str, tracked_only: bool = False) -> list[str]:
                 tracked = set(res.stdout.split())
         except Exception:
             tracked = None  # no git -> fall back to on-disk newest
-    out = []
-    for pat in ("CORRECTNESS_r*.json", "BENCH_r*.json"):
-        hits = sorted(glob.glob(os.path.join(repo, pat)))
-        if tracked is not None:
-            hits = [h for h in hits if os.path.basename(h) in tracked]
-        if hits:
-            out.append(os.path.basename(hits[-1]))
-    return out
+    hits = (_latest(repo, kind, tracked) for kind in ("CORRECTNESS", "BENCH"))
+    return [os.path.basename(h) for h in hits if h]
 
 
 def check_fresh(repo: str, report_path: str) -> str | None:
@@ -199,8 +205,8 @@ def build_report(repo: str) -> str:
         "gate, and the newest bench artifacts by `tools/report_md.py`.\n",
         "## Pipeline stages (manifest)\n", manifest_section(manifest), "",
         "## Correctness gate\n",
-        correctness_section(_latest(repo, "CORRECTNESS_r*.json")), "",
-        "## Bench\n", bench_section(_latest(repo, "BENCH_r*.json")), "",
+        correctness_section(_latest(repo, "CORRECTNESS")), "",
+        "## Bench\n", bench_section(_latest(repo, "BENCH")), "",
         "## Scaling efficiency (N vs 4N executors)\n",
         scaling_section(os.path.join(repo, "BENCH")), "",
     ]
