@@ -11,6 +11,13 @@
   signatures from md5-nibble weights; candidates = bucket collisions,
   exact cosine re-rank inside buckets. Signature is map-only; the join
   is equi on (signature) instead of a cross product.
+
+Scoring expressions (dot products, cosines, signatures) are parsed from
+SQL text with ONE ``F.expr`` call each rather than composed from
+``F.lit`` calls and Python lambdas: every Column call is a round trip
+to the JVM, and a 16-plane signature over 64-dim hyperplanes was ~1.1k
+of them per plan. The parsed tree is the same higher-order function
+(left-to-right float64 fold), so results are unchanged.
 """
 
 from __future__ import annotations
@@ -22,12 +29,36 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 
-def _dot(a: Column, b: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
+def _dot_sql(a: str, b: str) -> str:
+    """SQL text of <a, b> over two array SQL expressions: zip_with
+    multiplies element-wise in float64, aggregate folds left to right
+    from 0.0 (the fold order the DuckDB oracle reproduces)."""
+    return (
+        f"aggregate(zip_with({a}, {b}, (x, y) -> CAST(x AS DOUBLE) * "
+        f"CAST(y AS DOUBLE)), 0D, (acc, v) -> acc + v)"
     )
+
+
+def _dot(a: str, b: str) -> Column:
+    """<a, b> for two array SQL expressions (a column name is one): the
+    JVM higher-order function zip_with + aggregate in float64, parsed
+    from SQL text in one ``F.expr`` call."""
+    return F.expr(_dot_sql(a, b))
+
+
+def _norm(a: str) -> Column:
+    return F.expr(f"sqrt({_dot_sql(a, a)})")
+
+
+def _cosine(a: str, b: str, na: str | None = None, nb: str | None = None) -> Column:
+    """round(cos(a, b), 6) — rounded BEFORE any ranking or threshold:
+    fold-order double noise (~1e-15) can differ between engines and
+    flip near-ties. ``na``/``nb`` name precomputed norm columns (the
+    per-row hoist, see cosine_topk); by default the norms compute
+    inline."""
+    na = na or f"sqrt({_dot_sql(a, a)})"
+    nb = nb or f"sqrt({_dot_sql(b, b)})"
+    return F.expr(f"round({_dot_sql(a, b)} / ({na} * {nb}), 6)")
 
 
 def _spread(df: DataFrame) -> DataFrame:
@@ -51,7 +82,7 @@ def _spread(df: DataFrame) -> DataFrame:
 
 
 def with_norm(emb: DataFrame, vec_col: str = "embedding") -> DataFrame:
-    return emb.withColumn("l2_norm", F.sqrt(_dot(F.col(vec_col), F.col(vec_col))))
+    return emb.withColumn("l2_norm", _norm(vec_col))
 
 
 def cosine_topk(
@@ -65,27 +96,18 @@ def cosine_topk(
     q = emb.filter(F.col("vec_id").isin(query_ids)).select(
         F.col("vec_id").alias("query_id"),
         F.col(vec_col).alias("qvec"),
-        F.sqrt(_dot(F.col(vec_col), F.col(vec_col))).alias("_qn"),
+        _norm(vec_col).alias("_qn"),
     )
     c = _spread(emb).select(
         F.col("vec_id").alias("cand_id"),
         F.col(vec_col).alias("cvec"),
-        F.sqrt(_dot(F.col(vec_col), F.col(vec_col))).alias("_cn"),
+        _norm(vec_col).alias("_cn"),
     )
     scored = (
         c.crossJoin(F.broadcast(q))
         .filter(F.col("cand_id") != F.col("query_id"))
-        .withColumn(
-            "cosine",
-            # round BEFORE ranking: fold-order double noise (~1e-15) can
-            # differ between engines and flip ranks of near-ties; ranking
-            # on round(cos, 6) + cand_id is deterministic everywhere.
-            F.round(
-                _dot(F.col("qvec"), F.col("cvec"))
-                / (F.col("_qn") * F.col("_cn")),
-                6,
-            ),
-        )
+        # ranking on round(cos, 6) + cand_id is deterministic everywhere
+        .withColumn("cosine", _cosine("qvec", "cvec", "_qn", "_cn"))
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("cand_id"))
     return (
@@ -105,21 +127,26 @@ def _hyperplane(plane: int, dim: int) -> list[float]:
     return w
 
 
+def _signature_sql(vec_col: str, planes: range, dim: int) -> str:
+    """SQL text of the int signature sum_j sign(<v, h_planes[j]>) * 2^j:
+    each hyperplane rides inline as an array of double literals
+    (``repr`` round-trips every float64 exactly)."""
+    bits = []
+    for j, p in enumerate(planes):
+        w = ", ".join(f"{x!r}D" for x in _hyperplane(p, dim))
+        bits.append(
+            f"CASE WHEN {_dot_sql(vec_col, f'array({w})')} >= 0 "
+            f"THEN 1 ELSE 0 END * {2**j}"
+        )
+    return f"CAST({' + '.join(bits)} AS INT)"
+
+
 def lsh_signatures(
     emb: DataFrame, n_planes: int = 8, dim: int = 64, vec_col: str = "embedding"
 ) -> DataFrame:
     """Map-only bit-signature: bit_p = sign(<v, h_p>)."""
-    bits = []
-    for p in range(n_planes):
-        w = F.array(*[F.lit(x) for x in _hyperplane(p, dim)])
-        bits.append(
-            F.when(_dot(F.col(vec_col), w) >= 0, F.lit(1)).otherwise(F.lit(0))
-            * (2 ** p)
-        )
-    sig = bits[0]
-    for b in bits[1:]:
-        sig = sig + b
-    return _spread(emb).withColumn("lsh_sig", sig.cast("int"))
+    sig = F.expr(_signature_sql(vec_col, range(n_planes), dim))
+    return _spread(emb).withColumn("lsh_sig", sig)
 
 
 def band_signatures(
@@ -142,23 +169,13 @@ def band_signatures(
             "a remainder would silently drop planes and change recall"
         )
     r = n_planes // n_bands
-    bands = []
-    for b in range(n_bands):
-        bits = []
-        for j in range(r):
-            w = F.array(*[F.lit(x) for x in _hyperplane(b * r + j, dim)])
-            bits.append(
-                F.when(_dot(F.col(vec_col), w) >= 0, F.lit(1)).otherwise(F.lit(0))
-                * (2**j)
-            )
-        sig = bits[0]
-        for x in bits[1:]:
-            sig = sig + x
-        bands.append(
-            F.struct(F.lit(b).alias("band"), sig.cast("int").alias("sig"))
-        )
+    bands = ", ".join(
+        f"named_struct('band', {b}, "
+        f"'sig', {_signature_sql(vec_col, range(b * r, b * r + r), dim)})"
+        for b in range(n_bands)
+    )
     return _spread(emb).select(
-        "vec_id", F.explode(F.array(*bands)).alias("bs")
+        "vec_id", F.expr(f"explode(array({bands}))").alias("bs")
     ).select("vec_id", F.col("bs.band").alias("band"), F.col("bs.sig").alias("sig"))
 
 
@@ -204,24 +221,17 @@ def lsh_topk(
     q = emb.filter(F.col("vec_id").isin(query_ids)).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("qvec"),
-        F.sqrt(_dot(F.col("embedding"), F.col("embedding"))).alias("_qn"),
+        _norm("embedding").alias("_qn"),
     )
     c = emb.select(
         F.col("vec_id").alias("cand_id"),
         F.col("embedding").alias("cvec"),
-        F.sqrt(_dot(F.col("embedding"), F.col("embedding"))).alias("_cn"),
+        _norm("embedding").alias("_cn"),
     )
     scored = (
         pairs.join(F.broadcast(q), "query_id")
         .join(c, "cand_id")
-        .withColumn(
-            "cosine",
-            F.round(
-                _dot(F.col("qvec"), F.col("cvec"))
-                / (F.col("_qn") * F.col("_cn")),
-                6,
-            ),
-        )
+        .withColumn("cosine", _cosine("qvec", "cvec", "_qn", "_cn"))
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("cand_id"))
     return (
@@ -262,19 +272,15 @@ def embedding_near_dups(
     ea = emb.select(
         F.col("vec_id").alias("vec_a"),
         F.col(vec_col).alias("va"),
-        F.sqrt(_dot(F.col(vec_col), F.col(vec_col))).alias("_na"),
+        _norm(vec_col).alias("_na"),
     )
     eb = emb.select(
         F.col("vec_id").alias("vec_b"),
         F.col(vec_col).alias("vb"),
-        F.sqrt(_dot(F.col(vec_col), F.col(vec_col))).alias("_nb"),
+        _norm(vec_col).alias("_nb"),
     )
     scored = pairs.join(ea, "vec_a").join(eb, "vec_b").withColumn(
-        "cosine",
-        F.round(
-            _dot(F.col("va"), F.col("vb")) / (F.col("_na") * F.col("_nb")),
-            6,
-        ),
+        "cosine", _cosine("va", "vb", "_na", "_nb")
     )
     return scored.filter(F.col("cosine") >= threshold).select(
         "vec_a", "vec_b", "cosine"
@@ -299,12 +305,6 @@ def embedding_near_dup_clusters(
     ).withColumnRenamed("doc_id", "vec_id")
 
 
-def _cosine(a: Column, b: Column) -> Column:
-    return F.round(
-        _dot(a, b) / (F.sqrt(_dot(a, a)) * F.sqrt(_dot(b, b))), 6
-    )
-
-
 def _assign_cells(vecs: DataFrame, codebook: DataFrame) -> DataFrame:
     """argmax-cosine cell assignment of (vec_id, v) against a broadcast
     (cent_id, centvec) codebook via ``max_by`` — ONE hash aggregate, no
@@ -313,17 +313,10 @@ def _assign_cells(vecs: DataFrame, codebook: DataFrame) -> DataFrame:
     ORDER BY sim DESC, cent_id ASC."""
     # per-row norm hoist (see cosine_topk): each vector scores against
     # k centroids, so both norms compute once per ROW, not per pair
-    vn = _spread(vecs).withColumn("_vn", F.sqrt(_dot(F.col("v"), F.col("v"))))
-    cn = codebook.withColumn(
-        "_cn", F.sqrt(_dot(F.col("centvec"), F.col("centvec")))
-    )
+    vn = _spread(vecs).withColumn("_vn", _norm("v"))
+    cn = codebook.withColumn("_cn", _norm("centvec"))
     scored = vn.crossJoin(F.broadcast(cn)).withColumn(
-        "sim",
-        F.round(
-            _dot(F.col("v"), F.col("centvec"))
-            / (F.col("_vn") * F.col("_cn")),
-            6,
-        ),
+        "sim", _cosine("v", "centvec", "_vn", "_cn")
     )
     ord_key = F.struct(F.col("sim").alias("s"), (-F.col("cent_id")).alias("c"))
     return scored.groupBy("vec_id").agg(F.max_by("cent_id", ord_key).alias("cell"))
@@ -416,7 +409,7 @@ def _ivf_candidates(
         emb.filter(F.col("vec_id").isin(query_ids))
         .select(F.col("vec_id").alias("query_id"), F.col(vec_col).alias("qv"))
         .crossJoin(F.broadcast(codebook))
-        .withColumn("sim", _cosine(F.col("qv"), F.col("centvec")))
+        .withColumn("sim", _cosine("qv", "centvec"))
     )
     w_p = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("cent_id"))
     probes = (
@@ -459,15 +452,7 @@ def ivf_topk(
     scored = (
         pairs.join(F.broadcast(q), "query_id")
         .join(c, "cand_id")
-        .withColumn(
-            "cosine",
-            F.round(
-                _dot(F.col("qvec"), F.col("cvec"))
-                / (F.sqrt(_dot(F.col("qvec"), F.col("qvec")))
-                   * F.sqrt(_dot(F.col("cvec"), F.col("cvec")))),
-                6,
-            ),
-        )
+        .withColumn("cosine", _cosine("qvec", "cvec"))
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("cand_id"))
     return (
@@ -574,10 +559,10 @@ def fit_quantizer(emb: DataFrame, vec_col: str = "embedding") -> DataFrame:
 def _params_row(quant: DataFrame) -> DataFrame:
     """Collapse the dim-sized quantizer frame into ONE row of aligned
     (los, his) arrays for crossJoin(broadcast(...)) application."""
-    p = F.array_sort(F.collect_list(F.struct("dim_idx", "lo", "hi")))
+    p = "array_sort(collect_list(struct(dim_idx, lo, hi)))"
     return quant.agg(
-        F.transform(p, lambda s: s["lo"]).alias("_los"),
-        F.transform(p, lambda s: s["hi"]).alias("_his"),
+        F.expr(f"transform({p}, s -> s.lo)").alias("_los"),
+        F.expr(f"transform({p}, s -> s.hi)").alias("_his"),
     )
 
 
@@ -595,20 +580,11 @@ def quantize_embeddings(
     transform-with-index inside whole-stage codegen, no shuffle."""
     q = quant if quant is not None else fit_quantizer(emb, vec_col)
     out = emb.crossJoin(F.broadcast(_params_row(q)))
-    codes = F.transform(
-        F.col(vec_col),
-        lambda v, i: F.when(
-            F.element_at("_his", i + 1) == F.element_at("_los", i + 1),
-            F.lit(0),
-        ).otherwise(
-            F.floor(
-                (v.cast("double") - F.element_at("_los", i + 1))
-                / (F.element_at("_his", i + 1) - F.element_at("_los", i + 1))
-                * 255
-                + 0.5
-            ).cast("int")
-            - 128
-        ),
+    lo, hi = "element_at(_los, i + 1)", "element_at(_his, i + 1)"
+    codes = F.expr(
+        f"transform({vec_col}, (v, i) -> CASE WHEN {hi} = {lo} THEN 0 "
+        f"ELSE CAST(floor((CAST(v AS DOUBLE) - {lo}) / ({hi} - {lo}) * 255 "
+        "+ 0.5D) AS INT) - 128 END)"
     )
     return out.select("vec_id", codes.alias("codes"))
 
@@ -620,12 +596,10 @@ def dequantize(
     v'_i = lo_i + (code_i + 128) / 255 * (hi_i - lo_i). Same broadcast
     single-row parameter shape as quantize_embeddings; map-only."""
     out = codes.crossJoin(F.broadcast(_params_row(quant)))
-    deq = F.transform(
-        F.col("codes"),
-        lambda c, i: F.element_at("_los", i + 1)
-        + (c.cast("double") + 128)
-        / 255
-        * (F.element_at("_his", i + 1) - F.element_at("_los", i + 1)),
+    lo, hi = "element_at(_los, i + 1)", "element_at(_his, i + 1)"
+    deq = F.expr(
+        f"transform(codes, (c, i) -> {lo} + (CAST(c AS DOUBLE) + 128) / 255 "
+        f"* ({hi} - {lo}))"
     )
     return out.select("vec_id", deq.alias(out_col))
 
@@ -698,24 +672,15 @@ def knn_label_vote(
                     # transform lambdas get no cross-iteration CSE, so
                     # recomputing it per (row x seed) would triple the
                     # O(dim) arithmetic on the hot map-only path
-                    F.sqrt(_dot(F.col(vec_col), F.col(vec_col))).alias("sn"),
+                    _norm(vec_col).alias("sn"),
                 )
             )
         ).alias("_seeds")
     )
-    scored = F.transform(
-        F.col("_seeds"),
-        lambda s: F.struct(
-            (
-                -F.round(
-                    _dot(F.col(vec_col), s["v"])
-                    / (F.col("_qn") * s["sn"]),
-                    6,
-                )
-            ).alias("negc"),
-            s["sid"].alias("sid"),
-            s["lab"].alias("lab"),
-        ),
+    scored = F.expr(
+        "transform(_seeds, s -> named_struct("
+        f"'negc', -round({_dot_sql(vec_col, 's.v')} / (_qn * s.sn), 6), "
+        "'sid', s.sid, 'lab', s.lab))"
     )
     # struct order == (cosine DESC, sid ASC); vote tie -> smallest label
     topk = F.slice(F.array_sort(scored), 1, k)
@@ -731,7 +696,7 @@ def knn_label_vote(
     )
     return (
         _spread(rest)
-        .withColumn("_qn", F.sqrt(_dot(F.col(vec_col), F.col(vec_col))))
+        .withColumn("_qn", _norm(vec_col))
         .crossJoin(F.broadcast(srow))
         .select(
             "vec_id",
@@ -791,24 +756,19 @@ def embedding_contaminated_ids(
     bv = bench.select(
         F.col("vec_id").alias("bench_id"),
         F.col(vec_col).alias("bvec"),
-        F.sqrt(_dot(F.col(vec_col), F.col(vec_col))).alias("_bn"),
+        _norm(vec_col).alias("_bn"),
     )
     # per-row norm hoist (see cosine_topk)
     scored = cand.join(
         emb.select(
             "vec_id",
             F.col(vec_col).alias("cvec"),
-            F.sqrt(_dot(F.col(vec_col), F.col(vec_col))).alias("_cn"),
+            _norm(vec_col).alias("_cn"),
         ),
         "vec_id",
     ).join(F.broadcast(bv), "bench_id")
     dirty = scored.filter(
-        F.round(
-            _dot(F.col("cvec"), F.col("bvec"))
-            / (F.col("_cn") * F.col("_bn")),
-            6,
-        )
-        >= threshold
+        _cosine("cvec", "bvec", "_cn", "_bn") >= threshold
     )
     return dirty.select("vec_id").distinct()
 
@@ -856,18 +816,11 @@ def ivf_cell_summary(
     vecs = emb.select(
         "vec_id", "label",
         F.col(vec_col).alias("v"),
-        F.sqrt(_dot(F.col(vec_col), F.col(vec_col))).alias("_vn"),
+        _norm(vec_col).alias("_vn"),
     )
-    cbn = codebook.withColumn(
-        "_cn", F.sqrt(_dot(F.col("centvec"), F.col("centvec")))
-    )
+    cbn = codebook.withColumn("_cn", _norm("centvec"))
     scored = vecs.crossJoin(F.broadcast(cbn)).withColumn(
-        "sim",
-        F.round(
-            _dot(F.col("v"), F.col("centvec"))
-            / (F.col("_vn") * F.col("_cn")),
-            6,
-        ),
+        "sim", _cosine("v", "centvec", "_vn", "_cn")
     )
     ord_key = F.struct(F.col("sim").alias("s"), (-F.col("cent_id")).alias("c"))
     # tracked persist: asg is a diamond node (feeds both the per-label
@@ -981,7 +934,7 @@ def incremental_embedding_near_dups(
     nv = new_emb.select(
         F.col("vec_id").alias("new_id"),
         F.col(vec_col).alias("nvec"),
-        F.sqrt(_dot(F.col(vec_col), F.col(vec_col))).alias("_nn"),
+        _norm(vec_col).alias("_nn"),
     )
     # prune history to candidate ids BEFORE dequantizing: the int8
     # reconstruction is O(dim) per row, and at a 10^10-vector history
@@ -991,18 +944,11 @@ def incremental_embedding_near_dups(
     hv = dequantize(pruned, quant, out_col="hvec").select(
         F.col("vec_id").alias("hist_id"),
         "hvec",
-        F.sqrt(_dot(F.col("hvec"), F.col("hvec"))).alias("_hn"),
+        _norm("hvec").alias("_hn"),
     )
     cross = (
         hv.join(F.broadcast(hist_cand.join(nv, "new_id")), "hist_id")
-        .withColumn(
-            "cosine",
-            F.round(
-                _dot(F.col("nvec"), F.col("hvec"))
-                / (F.col("_nn") * F.col("_hn")),
-                6,
-            ),
-        )
+        .withColumn("cosine", _cosine("nvec", "hvec", "_nn", "_hn"))
         .filter(F.col("cosine") >= threshold)
         .select(
             F.least("new_id", "hist_id").alias("vec_a"),
@@ -1056,7 +1002,7 @@ def semantic_dedup_survivors(
     v = emb.select(
         "vec_id",
         F.col(vec_col).alias("_v"),
-        F.sqrt(_dot(F.col(vec_col), F.col(vec_col))).alias("_n"),
+        _norm(vec_col).alias("_n"),
     )
     sided = cells.join(v, "vec_id")
     a = sided.select(
@@ -1070,14 +1016,7 @@ def semantic_dedup_survivors(
     losers = (
         a.join(b, "cell")
         .filter(F.col("id_a") < F.col("id_b"))
-        .filter(
-            F.round(
-                _dot(F.col("va"), F.col("vb"))
-                / (F.col("_na") * F.col("_nb")),
-                6,
-            )
-            >= threshold
-        )
+        .filter(_cosine("va", "vb", "_na", "_nb") >= threshold)
         .select(F.col("id_b").alias("vec_id"))
         .distinct()
     )
@@ -1103,7 +1042,7 @@ def _pq_subvectors(vecs: DataFrame, m: int, dsub: int,
     ex = _spread(vecs).select("vec_id", F.explode(parts).alias("e")).select(
         "vec_id", "e.sub", "e.sv"
     )
-    return ex.withColumn("_sn", _dot(F.col("sv"), F.col("sv")))
+    return ex.withColumn("_sn", _dot("sv", "sv"))
 
 
 def _pq_assign(subs: DataFrame, codebook: DataFrame) -> DataFrame:
@@ -1114,13 +1053,9 @@ def _pq_assign(subs: DataFrame, codebook: DataFrame) -> DataFrame:
     between engines), min_by struct(d, cent_id) == ORDER BY d ASC,
     cent_id ASC. ONE hash aggregate over N x m x ksub scored rows with
     map-side combine; no window, no corpus self-join."""
-    cb = codebook.withColumn("_cn2", _dot(F.col("cv"), F.col("cv")))
+    cb = codebook.withColumn("_cn2", _dot("cv", "cv"))
     scored = subs.join(F.broadcast(cb), "sub").withColumn(
-        "d",
-        F.round(
-            F.col("_sn") - 2 * _dot(F.col("sv"), F.col("cv")) + F.col("_cn2"),
-            6,
-        ),
+        "d", F.expr(f"round(_sn - {_dot_sql('sv', 'cv')} * 2 + _cn2, 6)")
     )
     key = F.struct(F.col("d").alias("d"), F.col("cent_id").alias("c"))
     return scored.groupBy("vec_id", "sub").agg(

@@ -36,6 +36,14 @@ EMBEDDING_SCHEMA = T.StructType([
     T.StructField("label", T.IntegerType()),
 ])
 
+# State table schemas (``batch`` is the partition column). Reads pass
+# them explicitly: parquet schema inference costs a footer-reading Spark
+# job per read, several per micro-batch. tests/test_streaming_embedding
+# pins them to what the writers produce.
+BANDS_SCHEMA = "vec_id BIGINT, band INT, sig INT, batch INT"
+CODES_SCHEMA = "vec_id BIGINT, codes ARRAY<INT>, batch INT"
+QUANT_SCHEMA = "dim_idx INT, lo DOUBLE, hi DOUBLE"
+
 
 def stream_embeddings(spark: SparkSession, in_dir: str) -> DataFrame:
     """File-source stream of embedding rows (new parquet file = new
@@ -81,12 +89,12 @@ def make_batch_ingester(
         batch = bdf.select("vec_id", "embedding").dropDuplicates(["vec_id"])
         bands_path, codes_path = root / "bands", root / "codes"
 
-        def _state(path: Path) -> DataFrame:
+        def _state(path: Path, schema: str) -> DataFrame:
             # exclude this batch's own partition: a retried PARTIAL
             # batch may have written it before crashing, and the
             # probe must never see the batch's own vectors as
             # history (partition pruning makes the filter free)
-            df = spark.read.parquet(str(path))
+            df = spark.read.schema(schema).parquet(str(path))
             return df.filter(F.col("batch") != batch_id).drop("batch")
 
         has_history = bands_path.exists() and any(
@@ -98,12 +106,11 @@ def make_batch_ingester(
             # filename (new batch_id, so the marker cannot catch it);
             # already-ingested vec_ids must not re-enter the state or
             # re-emit their pairs
-            batch = batch.join(
-                _state(codes_path).select("vec_id"), "vec_id", "left_anti"
-            )
+            codes = _state(codes_path, CODES_SCHEMA)
+            batch = batch.join(codes.select("vec_id"), "vec_id", "left_anti")
         batch = batch.persist()
         try:
-            if batch.rdd.isEmpty():
+            if batch.isEmpty():
                 marker.mkdir()
                 return
             quant_path = root / "quant"
@@ -120,7 +127,7 @@ def make_batch_ingester(
                     tmp.rename(quant_path)
                 except OSError:
                     pass  # concurrent retry already committed it
-            quant = spark.read.parquet(str(quant_path))
+            quant = spark.read.schema(QUANT_SCHEMA).parquet(str(quant_path))
             # band signatures computed ONCE per batch and threaded into
             # the probe, the within-batch search, and the state write
             # (each would otherwise recompute the n_planes dot products)
@@ -131,8 +138,8 @@ def make_batch_ingester(
                 if has_history:
                     pairs = similarity.incremental_embedding_near_dups(
                         batch,
-                        band_state=_state(bands_path),
-                        code_state=_state(codes_path),
+                        band_state=_state(bands_path, BANDS_SCHEMA),
+                        code_state=codes,
                         quant=quant,
                         threshold=threshold,
                         n_planes=n_planes,

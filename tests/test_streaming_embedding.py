@@ -151,3 +151,30 @@ def test_streaming_ingest_releases_its_persists(spark, emb_batches, tmp_path):
     assert len(list(Path(state).glob("_batch_*"))) == 4
     assert cache._TRACKED == []
     assert persistent().size() == before
+
+
+def test_state_schemas_match_what_the_writers_produce(
+    spark, emb_batches, tmp_path
+):
+    """The ingest reads its state with fixed schemas instead of
+    inferring them; a writer whose output schema drifts must fail here
+    rather than be silently re-read through the old schema."""
+    from pyspark.sql.types import StructType
+
+    from ml4logs_spark.streaming import embedding_ingest as ei
+
+    state = tmp_path / "state_f"
+    ingest = ei.make_batch_ingester(str(state), threshold=0.98, dim=16)
+    for bid, name in enumerate(["b0", "b1"]):
+        ingest(spark.read.parquet(f"{emb_batches}/{name}"), bid)
+
+    def shape(schema):  # names and types, nullability ignored
+        return [(f.name, f.dataType.simpleString()) for f in schema]
+
+    for table, ddl in [
+        ("bands", ei.BANDS_SCHEMA),
+        ("codes", ei.CODES_SCHEMA),
+        ("quant", ei.QUANT_SCHEMA),
+    ]:
+        inferred = spark.read.parquet(str(state / table)).schema
+        assert shape(inferred) == shape(StructType.fromDDL(ddl)), table
