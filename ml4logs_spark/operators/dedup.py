@@ -22,6 +22,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 N_MINHASH = 8
 LSH_BANDS = 4  # rows-per-band = N_MINHASH / LSH_BANDS = 2
@@ -122,32 +123,14 @@ def lsh_bands(sig: DataFrame, bands: int = LSH_BANDS, n: int = N_MINHASH) -> Dat
 
 def lsh_candidate_pairs(docs: DataFrame) -> DataFrame:
     """Near-dup candidate pairs: docs sharing any LSH band bucket."""
-    return _band_pairs(lsh_bands(minhash_signatures(docs)))
+    return _bucket_pairs(lsh_bands(minhash_signatures(docs)), ["band", "h"], "doc_id")
 
 
 def jaccard_pairs(docs: DataFrame, pairs: DataFrame) -> DataFrame:
-    """Exact shingle-Jaccard for candidate pairs (verification step).
-    The shingle frame feeds both sides of the pair join (sh_a, sh_b),
-    so it is tracked-persisted — without it the shingle pass over the
-    corpus text runs twice per action (guide §2.4)."""
-    from ml4logs_spark import cache
-
-    sh = cache.track(with_shingles(docs).select("doc_id", "shingles"))
-    out = (
-        pairs.join(sh.withColumnRenamed("doc_id", "doc_a")
-                     .withColumnRenamed("shingles", "sh_a"), "doc_a")
-        .join(sh.withColumnRenamed("doc_id", "doc_b")
-                .withColumnRenamed("shingles", "sh_b"), "doc_b")
-    )
-    # |A ∪ B| = |A| + |B| - |A ∩ B| exactly (both arrays are distinct
-    # sets), so the union array never materializes — one hash-set pass
-    # per pair instead of two (guide §1.2 per-task work).
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size("sh_a") + F.size("sh_b") - inter
-    return out.select(
-        "doc_a", "doc_b",
-        F.round(inter / union, 6).alias("jaccard"),
-    )
+    """Exact shingle-Jaccard for candidate pairs (verification step):
+    ``store_jaccard_pairs`` over the docs' distinct shingle sets."""
+    sets = with_shingles(docs).select("doc_id", F.col("shingles").alias("sh_sig"))
+    return store_jaccard_pairs(sets, pairs)
 
 
 def near_dups(docs: DataFrame, threshold: float = 0.8) -> DataFrame:
@@ -445,6 +428,15 @@ def _simhash_bands(sig: DataFrame) -> DataFrame:
     )
 
 
+def _hamming() -> Column:
+    """Popcount distance of the pair's two signatures (``a.c*`` vs
+    ``b.c*``): four sign-safe 16-bit xor+popcounts, symmetric."""
+    return sum(
+        F.bit_count(F.col(f"a.c{i}").bitwiseXOR(F.col(f"b.c{i}")))
+        for i in range(SIMHASH_CHUNKS)
+    ).cast("int").alias("hamming")
+
+
 def simhash_candidate_pairs(docs: DataFrame) -> DataFrame:
     """Bucket-colliding pairs with their exact hamming distance.
 
@@ -465,26 +457,11 @@ def simhash_candidate_pairs(docs: DataFrame) -> DataFrame:
     chunk, with 2^32 buckets per band. Chunk width is the knob; no
     structural change.
 
-    The band table is tracked-persisted: it feeds both sides of the
-    self-join, and the simhash64 explode+aggregate would otherwise run
-    twice per action (guide §2.4)."""
-    from ml4logs_spark import cache
-
-    bands = cache.track(_simhash_bands(simhash64(docs)))
-    a, b = bands.alias("a"), bands.alias("b")
-    hamming = sum(
-        F.bit_count(F.col(f"a.c{i}").bitwiseXOR(F.col(f"b.c{i}")))
-        for i in range(SIMHASH_CHUNKS)
-    )
-    return (
-        a.join(b, ["band", "chunk"])
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            hamming.cast("int").alias("hamming"),
-        )
-        .distinct()
+    Keys (band, chunk) over ``_simhash_bands``; the hamming distance is
+    the kernel's in-row score (``_bucket_pairs``)."""
+    return _bucket_pairs(
+        _simhash_bands(simhash64(docs)), ["band", "chunk"], "doc_id",
+        score=_hamming(),
     )
 
 
@@ -508,63 +485,21 @@ def incremental_simhash_near_dups(
 
     Unlike the MinHash path, simhash needs only ONE state table: the
     signature both generates candidates (its chunks ARE the pigeonhole
-    bands) and verifies them (the popcount distance is a function of
-    the signatures alone) — 8 bytes/doc of state, no text retained,
-    and the day-2 ingest never rescans history. To advance the
-    frontier append ``simhash64(new_docs)`` for the accepted rows.
-
-    Exactness carries over: any pair within radius 3 of the 64-bit
-    signature agrees on a whole 16-bit chunk, so new-vs-historical
-    banding misses nothing (simhash_candidate_pairs' pigeonhole
-    argument, applied across the batch boundary).
-
-    Replay-safe: signatures are a deterministic function of text, so a
-    batch whose signatures were already appended collides with its own
-    identical state rows — self-pairs are filtered, cross pairs
-    canonicalize and distinct away, and the output is unchanged.
-
-    The batch band table is tracked-persisted (it feeds the historical
-    probe AND both sides of the within-batch self-join — the simhash64
-    explode+aggregate would otherwise run 3x per action, guide §2.4),
-    and the hamming radius filter runs BEFORE the distinct so only
-    within-radius pairs reach the dedup shuffle (hamming is a pure
-    function of the pair, so filter and distinct commute — guide §2.3
-    'shuffle fewer bytes')."""
-    from ml4logs_spark import cache
-
-    nb = cache.track(_simhash_bands(simhash64(new_docs)))
-    hb = _simhash_bands(
+    bands, keys (band, chunk)) and verifies them (the popcount distance
+    is the kernel's in-row score) — 8 bytes/doc of state, no text
+    retained. To advance the frontier append ``simhash64(new_docs)``
+    for the accepted rows. Any pair within radius 3 agrees on a whole
+    16-bit chunk, so new-vs-historical banding misses nothing. The
+    radius filter is pushed below the kernel's distinct (hamming is a
+    pure function of the pair), so only within-radius pairs reach the
+    dedup shuffle."""
+    state = _simhash_bands(
         seen_sigs.select("doc_id", *[f"c{b}" for b in range(SIMHASH_CHUNKS)])
     )
-    hamming = sum(
-        F.bit_count(F.col(f"a.c{i}").bitwiseXOR(F.col(f"b.c{i}")))
-        for i in range(SIMHASH_CHUNKS)
-    ).cast("int")
-    hist_hits = (
-        nb.alias("a")
-        .join(hb.alias("b"), ["band", "chunk"])
-        .filter(F.col("a.doc_id") != F.col("b.doc_id"))
-        .select(
-            F.least(F.col("a.doc_id"), F.col("b.doc_id")).alias("doc_a"),
-            F.greatest(F.col("a.doc_id"), F.col("b.doc_id")).alias("doc_b"),
-            hamming.alias("hamming"),
-        )
-    )
-    new_new = (
-        nb.alias("a")
-        .join(nb.alias("b"), ["band", "chunk"])
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            hamming.alias("hamming"),
-        )
-    )
-    return (
-        hist_hits.unionByName(new_new)
-        .filter(F.col("hamming") <= max_hamming)
-        .distinct()
-    )
+    return _bucket_pairs(
+        _simhash_bands(simhash64(new_docs)), ["band", "chunk"], "doc_id",
+        state_bands=state, score=_hamming(),
+    ).filter(F.col("hamming") <= max_hamming)
 
 
 def contaminated_ids(docs: DataFrame, benchmark: DataFrame) -> DataFrame:
@@ -826,26 +761,90 @@ def incremental_exact_dedup(
     )
 
 
-def _band_pairs(bands: DataFrame) -> DataFrame:
-    """Bucket-colliding (doc_a < doc_b) pairs from a (doc_id, band, h)
-    band table — shared by whole-corpus and incremental candidate
-    generation. The band frame feeds both sides of the self-join, so
-    it is tracked-persisted — without it the upstream minhash pipeline
-    evaluates twice per action (guide §2.4); fixed-width rows, corpus x
-    bands sized (the same table the incremental path keeps as state
-    anyway). Re-persisting an already-persisted frame is a no-op."""
+def _bucket_pairs(
+    batch_bands: DataFrame,
+    keys: list[str],
+    id_col: str,
+    state_bands: DataFrame | None = None,
+    score: Column | None = None,
+) -> DataFrame:
+    """Candidate pairs from a bucket table: the one bucket equi-join
+    behind every near-dup family (MinHash bands, SimHash chunks,
+    embedding hyperplane bands). Rows of ``batch_bands`` (``id_col`` +
+    the bucket ``keys``) pair with every other batch row in the same
+    bucket and, when ``state_bands`` is given, with every historical
+    row in the same bucket — the day-2 probe, in which history exists
+    only as its bucket table and is never rescanned. Returns
+    ``(<stem>_a, <stem>_b[, score])`` with ``<stem>_a < <stem>_b``
+    (``doc_id`` -> doc_a/doc_b, ``vec_id`` -> vec_a/vec_b), each pair
+    once.
+
+    - Whole corpus (no state): the batch self-joins with ``a < b``.
+    - Day 2: the batch is broadcast (a day's batch is small against
+      history, so the state never shuffles as a build side) and probes
+      the state rows and its own rows in ONE join. ``!=`` drops
+      self-matches and ``least``/``greatest`` canonicalises, so a pair
+      found from both sides is one row after the ``distinct``.
+    - Replay-safe: a batch whose bucket rows were already appended to
+      the state collides with its own copies; the self-matches drop and
+      its other hits repeat pairs the ``distinct`` removes, so the
+      output is unchanged. Assumes ids are stable content ids (an id
+      reused for different content is an upstream bug this kernel does
+      not referee).
+    - The batch table is a diamond node (both sides of the join), so it
+      is tracked-persisted here — the only persist of the candidate
+      step: Catalyst has no cross-branch CSE, and without it the
+      upstream signature pipeline over the batch evaluates twice per
+      action (guide §2.4). Fixed-width, batch-sized rows; re-persisting
+      a persisted frame is a no-op.
+    - ``score`` is one in-row column over the ``a.``/``b.``-qualified
+      columns of the two bucket rows (SimHash's hamming distance). It
+      must be symmetric, because pairs are re-ordered; it runs before
+      the ``distinct``, and a filter on it pushes below it."""
     from ml4logs_spark import cache
 
-    bands = cache.track(bands)
-    a = bands.alias("a")
-    b = bands.alias("b")
-    return (
-        a.join(b, ["band", "h"])
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
+    stem = id_col.removesuffix("_id")
+    a_id, b_id = F.col(f"a.{id_col}"), F.col(f"b.{id_col}")
+    extra = [score] if score is not None else []
+    batch = cache.track(batch_bands)
+    if state_bands is None:
+        pairs = (
+            batch.alias("a").join(batch.alias("b"), keys)
+            .filter(a_id < b_id)
+            .select(a_id.alias(f"{stem}_a"), b_id.alias(f"{stem}_b"), *extra)
         )
-        .distinct()
+    else:
+        rows = state_bands.select(*batch.columns).unionByName(batch)
+        pairs = (
+            rows.alias("b").join(F.broadcast(batch.alias("a")), keys)
+            .filter(a_id != b_id)
+            .select(
+                F.least(a_id, b_id).alias(f"{stem}_a"),
+                F.greatest(a_id, b_id).alias(f"{stem}_b"),
+                *extra,
+            )
+        )
+    return pairs.distinct()
+
+
+def _verify_pairs(
+    pairs: DataFrame, store: DataFrame, id_col: str, score: Column
+) -> DataFrame:
+    """The verify step shared by the near-dup families: join candidate
+    pairs (``_bucket_pairs`` output) to a per-id ``store`` on both ids
+    and compute ``score`` from its ``a.``/``b.``-qualified columns.
+    Returns ``(<stem>_a, <stem>_b, score)``. The store feeds both sides
+    of the pair join, so it is tracked-persisted (the diamond rule of
+    ``_bucket_pairs``): without it the store's upstream (shingling,
+    dequantizing) runs twice per action."""
+    from ml4logs_spark import cache
+
+    stem = id_col.removesuffix("_id")
+    s = cache.track(store)
+    return (
+        pairs.join(s.alias("a"), F.col(f"{stem}_a") == F.col(f"a.{id_col}"))
+        .join(s.alias("b"), F.col(f"{stem}_b") == F.col(f"b.{id_col}"))
+        .select(f"{stem}_a", f"{stem}_b", score)
     )
 
 
@@ -854,38 +853,16 @@ def incremental_near_dups(
 ) -> DataFrame:
     """Cross-batch near-dup CANDIDATE pairs: each new doc joined against
     the HISTORICAL LSH band table (doc_id, band, h), plus new-vs-new
-    candidates within the batch. Returns (doc_a, doc_b) with
-    doc_a < doc_b (canonical order, self-pairs from replayed batches
-    filtered); run the result through ``jaccard_pairs`` on whichever
-    sides still carry text for exact verification.
-
-    At scale the historical band table is the only state kept (bands x
-    docs rows, no text), the equi-join on (band, h) touches matching
-    buckets only, and appending ``lsh_bands(minhash_signatures(new))``
-    advances the frontier. Canonical ordering means a batch replayed
-    after its bands were already appended yields each pair once, never
-    a (x, x) self-pair.
-
-    The new batch's band table is a diamond node — it feeds BOTH the
-    historical-bucket probe and the within-batch pair join — so it is
-    tracked-persisted (guide §2.4: Catalyst has no cross-branch CSE;
-    without the persist the whole minhash pipeline over the batch text
-    evaluates twice per action). Fixed-width rows, batch-sized. The
-    final distinct dedups the union, so hist_hits needs no inner
-    distinct of its own (one less shuffle, identical result set)."""
-    from ml4logs_spark import cache
-
-    nb = cache.track(lsh_bands(minhash_signatures(new_docs)))
-    hist_hits = (
-        nb.withColumnRenamed("doc_id", "new_id")
-        .join(seen_bands.withColumnRenamed("doc_id", "hist_id"), ["band", "h"])
-        .filter(F.col("new_id") != F.col("hist_id"))
-        .select(
-            F.least("new_id", "hist_id").alias("doc_a"),
-            F.greatest("new_id", "hist_id").alias("doc_b"),
-        )
+    candidates within the batch, on keys (band, h) via
+    ``_bucket_pairs``. Returns (doc_a, doc_b) with doc_a < doc_b; run
+    the result through ``store_jaccard_pairs`` for exact verification.
+    The band table is the only state kept (bands x docs rows, no
+    text); appending ``lsh_bands(minhash_signatures(new))`` advances
+    the frontier."""
+    return _bucket_pairs(
+        lsh_bands(minhash_signatures(new_docs)), ["band", "h"], "doc_id",
+        state_bands=seen_bands,
     )
-    return hist_hits.unionByName(_band_pairs(nb)).distinct()
 
 
 STORE_HASH_CHARS = 8  # 32-bit hashed shingles in the verification store
@@ -919,30 +896,18 @@ def shingle_store(
 
 
 def store_jaccard_pairs(store: DataFrame, pairs: DataFrame) -> DataFrame:
-    """Exact hashed-shingle Jaccard for candidate pairs, joined against
-    a ``shingle_store`` frame instead of document text — the
-    verification step when one (or both) sides only exist as state.
-    Same two doc_id equi-joins as ``jaccard_pairs``; the store side is
-    compact fixed-width arrays."""
-    s = store.select("doc_id", "sh_sig")
-    out = (
-        pairs.join(
-            s.withColumnRenamed("doc_id", "doc_a")
-            .withColumnRenamed("sh_sig", "sig_a"),
-            "doc_a",
-        ).join(
-            s.withColumnRenamed("doc_id", "doc_b")
-            .withColumnRenamed("sh_sig", "sig_b"),
-            "doc_b",
-        )
-    )
-    # same set identity as jaccard_pairs: |A ∪ B| = |A| + |B| - |A ∩ B|
-    # (sh_sig is array_distinct'd at build time), skipping the union
-    # array materialization per pair.
-    inter = F.size(F.array_intersect("sig_a", "sig_b"))
-    union = F.size("sig_a") + F.size("sig_b") - inter
-    return out.select(
-        "doc_a", "doc_b", F.round(inter / union, 6).alias("jaccard")
+    """The set-Jaccard verifier: exact Jaccard of each candidate pair's
+    ``sh_sig`` sets in a (doc_id, sh_sig) store — a ``shingle_store``
+    frame when one or both sides exist only as state, or the docs'
+    shingle sets (``jaccard_pairs``). Returns (doc_a, doc_b, jaccard).
+    |A ∪ B| = |A| + |B| - |A ∩ B| exactly (both arrays are distinct
+    sets), so the union array never materializes — one hash-set pass
+    per pair instead of two (guide §1.2 per-task work)."""
+    inter = F.size(F.array_intersect("a.sh_sig", "b.sh_sig"))
+    union = F.size("a.sh_sig") + F.size("b.sh_sig") - inter
+    return _verify_pairs(
+        pairs, store.select("doc_id", "sh_sig"), "doc_id",
+        F.round(inter / union, 6).alias("jaccard"),
     )
 
 
@@ -954,40 +919,25 @@ def incremental_near_dup_verified(
 ) -> DataFrame:
     """Cross-batch near-dup pairs, VERIFIED: LSH candidates from
     ``incremental_near_dups`` (new-vs-historical + new-vs-new), then
-    exact hashed-shingle Jaccard against the union of the historical
-    ``shingle_store`` state and the batch's own store, thresholded.
-    Returns (doc_a, doc_b, jaccard) with doc_a < doc_b.
+    exact hashed-shingle Jaccard (``store_jaccard_pairs``) against the
+    union of the historical ``shingle_store`` state and the batch's own
+    store, thresholded. Returns (doc_a, doc_b, jaccard) with doc_a <
+    doc_b.
 
     This closes the day-2 ingest loop: the batch path (``near_dups``)
     verifies against text, but a real pipeline only keeps state — the
     band table for candidates plus this store for verification; the
     historical corpus is never rescanned and no text is retained. To
     advance the frontier append ``lsh_bands(minhash_signatures(new))``
-    and ``shingle_store(new)`` for the ACCEPTED rows.
-
-    Replay-safe: a batch whose state was already appended anti-joins
-    its (identical — the store is a deterministic function of text)
-    entries out of the union, candidate pairs stay canonical with no
-    self-pairs, and the verified output is unchanged. Assumes doc_ids
-    are stable content ids (a doc_id reused for different text is an
-    upstream bug this operator does not referee).
-
-    The unioned store is tracked-persisted: it feeds both sides of the
-    verification join (sig_a and sig_b), and without the persist the
-    batch's shingle hashing and the anti-join run twice per action
-    (guide §2.4 — no cross-branch CSE). Compact fixed-width arrays."""
-    from ml4logs_spark import cache
-
-    cands = incremental_near_dups(new_docs, seen_bands)
-    new_store = shingle_store(new_docs)
-    store = cache.track(
-        seen_store.select("doc_id", "sh_sig").unionByName(
-            new_store.join(seen_store.select("doc_id"), "doc_id", "left_anti")
-        )
+    and ``shingle_store(new)`` for the ACCEPTED rows. A replayed batch
+    whose store rows were already appended anti-joins them out of the
+    union (the store is a deterministic function of text)."""
+    store = seen_store.select("doc_id", "sh_sig").unionByName(
+        shingle_store(new_docs).join(seen_store.select("doc_id"), "doc_id", "left_anti")
     )
-    return store_jaccard_pairs(store, cands).filter(
-        F.col("jaccard") >= threshold
-    )
+    return store_jaccard_pairs(
+        store, incremental_near_dups(new_docs, seen_bands)
+    ).filter(F.col("jaccard") >= threshold)
 
 
 def conv_dedup_survivors(turns: DataFrame) -> DataFrame:
@@ -1173,8 +1123,6 @@ def _prefix_terms(turns: DataFrame) -> DataFrame:
     polynomial prefix hash computable by one streaming window pass —
     O(1) state per row, never a per-row running array (which would be
     O(turns^2) bytes on the planted giant conversation)."""
-    from pyspark.sql.window import Window
-
     t = F.coalesce(F.col("text"), F.lit(""))
     frame = F.concat_ws(":", F.length(t).cast("string"), t)
     w = Window.partitionBy("conv_id").orderBy("turn_idx")
@@ -1207,6 +1155,23 @@ def conv_frame_store(turns: DataFrame) -> DataFrame:
     return _prefix_terms(turns).select("conv_id", "pos", "frame_hash")
 
 
+def _prefix_state(terms: DataFrame) -> DataFrame:
+    """(conv_id, depth, p1, p2) from ``_prefix_terms`` rows: the running
+    sums of t1/t2 over each conversation's positions — one streaming
+    window pass, O(1) state per row."""
+    run = (
+        Window.partitionBy("conv_id")
+        .orderBy("pos")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    return terms.select(
+        "conv_id",
+        (F.col("pos") + 1).cast("int").alias("depth"),
+        F.sum("t1").over(run).alias("p1"),
+        F.sum("t2").over(run).alias("p2"),
+    )
+
+
 def conv_prefix_state(turns: DataFrame) -> DataFrame:
     """(conv_id, depth, p1, p2): per-depth running prefix hashes — the
     candidate half of the branch-dedup day-2 state (the band-table
@@ -1215,19 +1180,7 @@ def conv_prefix_state(turns: DataFrame) -> DataFrame:
     the pair core derives it as max(depth), so a conversation extended
     by a later batch merges cleanly (its old rows are a subset of the
     new ones)."""
-    from pyspark.sql.window import Window
-
-    run = (
-        Window.partitionBy("conv_id")
-        .orderBy("pos")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    return _prefix_terms(turns).select(
-        "conv_id",
-        (F.col("pos") + 1).cast("int").alias("depth"),
-        F.sum("t1").over(run).alias("p1"),
-        F.sum("t2").over(run).alias("p2"),
-    )
+    return _prefix_state(_prefix_terms(turns))
 
 
 def _branch_pairs_from_state(
@@ -1324,20 +1277,9 @@ def conv_prefix_dups(turns: DataFrame, min_shared: int = 1) -> DataFrame:
     from ml4logs_spark import cache
 
     terms = cache.track(_prefix_terms(turns))
-    from pyspark.sql.window import Window
-
-    run = (
-        Window.partitionBy("conv_id")
-        .orderBy("pos")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    return _branch_pairs_from_state(
+        _prefix_state(terms), terms, min_shared=min_shared
     )
-    state = terms.select(
-        "conv_id",
-        (F.col("pos") + 1).cast("int").alias("depth"),
-        F.sum("t1").over(run).alias("p1"),
-        F.sum("t2").over(run).alias("p2"),
-    )
-    return _branch_pairs_from_state(state, terms, min_shared=min_shared)
 
 
 def conv_branch_survivors(turns: DataFrame, min_shared: int = 1) -> DataFrame:
@@ -1382,20 +1324,9 @@ def incremental_conv_prefix_dups(
     consumers multiplied that further (guide §2.4; the same
     shared-terms shape ``conv_prefix_dups`` already uses)."""
     from ml4logs_spark import cache
-    from pyspark.sql.window import Window
 
     terms = cache.track(_prefix_terms(new_turns))
-    run = (
-        Window.partitionBy("conv_id")
-        .orderBy("pos")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    new_state = terms.select(
-        "conv_id",
-        (F.col("pos") + 1).cast("int").alias("depth"),
-        F.sum("t1").over(run).alias("p1"),
-        F.sum("t2").over(run).alias("p2"),
-    )
+    new_state = _prefix_state(terms)
     new_frames = terms.select("conv_id", "pos", "frame_hash")
     new_ids = terms.select("conv_id").distinct()
     state = seen_state.select("conv_id", "depth", "p1", "p2").unionByName(

@@ -241,6 +241,22 @@ def lsh_topk(
     )
 
 
+def _cosine_verified(pairs: DataFrame, vecs: DataFrame, vec_col: str,
+                     threshold: float) -> DataFrame:
+    """Exact cosine of each candidate pair against one (vec_id, v, norm)
+    store built from ``vecs`` (the per-row norm hoist of cosine_topk),
+    thresholded — ``dedup._verify_pairs`` with a cosine score."""
+    from ml4logs_spark.operators.dedup import _verify_pairs
+
+    store = vecs.select("vec_id", F.col(vec_col).alias("v")).withColumn(
+        "norm", _norm("v")
+    )
+    cos = _cosine("a.v", "b.v", "a.norm", "b.norm").alias("cosine")
+    return _verify_pairs(pairs, store, "vec_id", cos).filter(
+        F.col("cosine") >= threshold
+    )
+
+
 def embedding_near_dups(
     emb: DataFrame,
     threshold: float = 0.3,
@@ -251,40 +267,20 @@ def embedding_near_dups(
     bands: DataFrame | None = None,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs — the vector analog of
-    dedup.near_dups: candidates collide in any LSH band (equi-join on
-    buckets, O(n x bands), never all-pairs), then exact cosine verify
-    against the threshold. Symmetric (doc_a < doc_b), whole-corpus."""
+    dedup.near_dups: candidates collide in any LSH band (keys (band,
+    sig) through ``dedup._bucket_pairs``, O(n x bands), never
+    all-pairs), then exact cosine verify against the threshold.
+    Symmetric (vec_a < vec_b), whole-corpus."""
+    from ml4logs_spark.operators.dedup import _bucket_pairs
+
     bs = (
         bands
         if bands is not None
         else band_signatures(emb, n_planes=n_planes, n_bands=n_bands,
                              dim=dim, vec_col=vec_col)
     )
-    a = bs.alias("a")
-    b = bs.alias("b")
-    pairs = (
-        a.join(b, ["band", "sig"])
-        .filter(F.col("a.vec_id") < F.col("b.vec_id"))
-        .select(F.col("a.vec_id").alias("vec_a"), F.col("b.vec_id").alias("vec_b"))
-        .distinct()
-    )
-    # per-row norm hoist, same rationale as cosine_topk
-    ea = emb.select(
-        F.col("vec_id").alias("vec_a"),
-        F.col(vec_col).alias("va"),
-        _norm(vec_col).alias("_na"),
-    )
-    eb = emb.select(
-        F.col("vec_id").alias("vec_b"),
-        F.col(vec_col).alias("vb"),
-        _norm(vec_col).alias("_nb"),
-    )
-    scored = pairs.join(ea, "vec_a").join(eb, "vec_b").withColumn(
-        "cosine", _cosine("va", "vb", "_na", "_nb")
-    )
-    return scored.filter(F.col("cosine") >= threshold).select(
-        "vec_a", "vec_b", "cosine"
-    )
+    pairs = _bucket_pairs(bs, ["band", "sig"], "vec_id")
+    return _cosine_verified(pairs, emb, vec_col, threshold)
 
 
 def embedding_near_dup_clusters(
@@ -888,15 +884,22 @@ def incremental_embedding_near_dups(
     reach. New batches must be coded with the SAME frozen params
     (re-fitting would silently re-interpret every historical code).
 
-    Candidates: new-batch band signatures equi-join the band state
-    (new side BROADCAST — a day's batch is small against history) plus
-    new-vs-new collisions within the batch; verify is exact cosine of
-    the new vector against the DEQUANTIZED historical vector (the
-    threshold applies to the dequantized value — a deterministic
-    contract; bench.py's quantized_recall measures how faithful that
-    representation is), new-new pairs verify exact-exact. Output
-    (vec_a, vec_b, cosine) with vec_a < vec_b; replay-safe (same
-    inputs -> bit-same output under any partitioning).
+    Candidates: ``dedup._bucket_pairs`` on keys (band, sig), the batch
+    against ``band_state`` plus within the batch. Verify: exact cosine
+    against one (vec_id, v, norm) store — the batch's exact vectors
+    plus the DEQUANTIZED historical vectors of candidate ids not in the
+    batch (the threshold applies to the dequantized value — a
+    deterministic contract; bench.py's quantized_recall measures how
+    faithful that representation is). Batch vectors win over state
+    rows with the same vec_id, so a batch whose state was already
+    appended verifies exactly as on fresh state. History is pruned to
+    candidate ids BEFORE dequantizing: the int8 reconstruction is
+    O(dim) per row, and paying it for every historical row would dwarf
+    the probe. The candidate ids are the state rows sharing a bucket
+    with the broadcast batch (a map-only semi-join over ``band_state``)
+    rather than ids read back from the pairs, which would make the
+    pairs a second diamond node. Output (vec_a, vec_b, cosine) with
+    vec_a < vec_b.
 
     Banding knob at scale: exact/near-identical duplicates collide in
     EVERY band regardless of plane count, so for dedup probing raise
@@ -905,7 +908,7 @@ def incremental_embedding_near_dups(
     sf0.1 fixture with identical exact-dup recall (bench.py uses
     16x4); the state must be WRITTEN with the same banding it is
     probed with."""
-    from ml4logs_spark import cache
+    from ml4logs_spark.operators.dedup import _bucket_pairs
 
     nb = (
         new_bands
@@ -913,53 +916,20 @@ def incremental_embedding_near_dups(
         else band_signatures(new_emb, n_planes=n_planes, n_bands=n_bands,
                              dim=dim, vec_col=vec_col)
     )
-    # tracked persist: hist_cand is a diamond (feeds the code-state
-    # prune AND the verify join) — without it the band-state probe,
-    # the dominant scan at a 10^10-vector history, would run twice
-    hist_cand = cache.track(
-        band_state.select(
-            "band", "sig", F.col("vec_id").alias("hist_id")
+    pairs = _bucket_pairs(nb, ["band", "sig"], "vec_id", state_bands=band_state)
+    batch = new_emb.select(
+        "vec_id", F.col(vec_col).cast("array<double>").alias(vec_col)
+    )
+    hist_ids = (
+        band_state.join(
+            F.broadcast(nb.select("band", "sig")), ["band", "sig"], "left_semi"
         )
-        .join(
-            F.broadcast(
-                nb.select("band", "sig", F.col("vec_id").alias("new_id"))
-            ),
-            ["band", "sig"],
-        )
-        # defensive: a re-ingested vec_id must never pair with itself
-        .filter(F.col("new_id") != F.col("hist_id"))
-        .select("new_id", "hist_id")
-        .distinct()
+        .select("vec_id")
+        .join(batch.select("vec_id"), "vec_id", "left_anti")
     )
-    nv = new_emb.select(
-        F.col("vec_id").alias("new_id"),
-        F.col(vec_col).alias("nvec"),
-        _norm(vec_col).alias("_nn"),
-    )
-    # prune history to candidate ids BEFORE dequantizing: the int8
-    # reconstruction is O(dim) per row, and at a 10^10-vector history
-    # paying it for every non-candidate row would dwarf the probe
-    cand_ids = hist_cand.select(F.col("hist_id").alias("vec_id")).distinct()
-    pruned = code_state.join(F.broadcast(cand_ids), "vec_id", "left_semi")
-    hv = dequantize(pruned, quant, out_col="hvec").select(
-        F.col("vec_id").alias("hist_id"),
-        "hvec",
-        _norm("hvec").alias("_hn"),
-    )
-    cross = (
-        hv.join(F.broadcast(hist_cand.join(nv, "new_id")), "hist_id")
-        .withColumn("cosine", _cosine("nvec", "hvec", "_nn", "_hn"))
-        .filter(F.col("cosine") >= threshold)
-        .select(
-            F.least("new_id", "hist_id").alias("vec_a"),
-            F.greatest("new_id", "hist_id").alias("vec_b"),
-            "cosine",
-        )
-    )
-    within = embedding_near_dups(
-        new_emb, threshold, n_planes, n_bands, dim, vec_col, bands=nb
-    )
-    return cross.unionByName(within)
+    pruned = code_state.join(F.broadcast(hist_ids), "vec_id", "left_semi")
+    hist = dequantize(pruned, quant, out_col=vec_col)
+    return _cosine_verified(pairs, batch.unionByName(hist), vec_col, threshold)
 
 
 def semantic_dedup_survivors(

@@ -76,3 +76,17 @@ def test_nullable_int_stays_int_in_arrow():
         "SELECT CAST(v AS BIGINT) AS v FROM (VALUES (1), (NULL)) t(v)"
     ).arrow()
     assert compare_arrow_schemas(s_tbl, d_tbl) is None
+
+
+def test_unknown_query_name_fails_before_spark_starts(tmp_path):
+    # a misspelled name used to run nothing and print "0 failures"
+    import subprocess
+
+    tool = Path(__file__).resolve().parent.parent / "tools" / "check_oracle.py"
+    r = subprocess.run(
+        [sys.executable, str(tool), str(tmp_path), "near_dups", "near_dupz"],
+        capture_output=True, text=True, timeout=120,
+    )
+    assert r.returncode != 0
+    assert "near_dupz" in r.stderr and "'near_dups'" not in r.stderr
+    assert "failures" not in r.stdout

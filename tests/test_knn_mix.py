@@ -361,6 +361,31 @@ def test_incremental_embedding_near_dups_replay_safe(spark):
     assert a == b and len(a) == 2
 
 
+def test_incremental_embedding_near_dups_on_advanced_state(spark):
+    # a replayed batch meets state that already holds its own bands and
+    # codes: each pair must come out once, with the batch's exact-vector
+    # cosine, exactly as against fresh state
+    emb = _day2_fixture(spark)
+    hist = emb.filter("vec_id % 2 = 0")
+    new = emb.filter("vec_id % 2 = 1")
+    quant = similarity.fit_quantizer(hist)
+
+    def run(state):
+        return sorted(map(tuple, similarity.incremental_embedding_near_dups(
+            new,
+            band_state=similarity.band_signatures(
+                state, n_planes=8, n_bands=4, dim=8),
+            code_state=similarity.quantize_embeddings(state, quant),
+            quant=quant,
+            threshold=0.98,
+            dim=8,
+        ).collect()))
+
+    fresh = run(hist)
+    assert [r[:2] for r in fresh] == [(20, 21), (23, 25)]
+    assert run(emb) == fresh
+
+
 def test_incremental_embedding_history_never_needs_vectors(spark):
     # the op must run with ONLY the three state tables for history —
     # simulate by materializing state then dropping the history frame

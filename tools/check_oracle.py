@@ -133,6 +133,13 @@ def main() -> int:
     import __spark_entry__ as entry
     from ml4logs_spark.session import get_spark
 
+    qs, oracles = entry.queries(), entry.oracle_sql()
+    # a misspelled name would otherwise run nothing and report 0 failures
+    unknown = sorted(only - set(qs))
+    if unknown:
+        print(f"unknown query names: {unknown}", file=sys.stderr)
+        return 2
+
     # no console progress bar: its carriage returns splice into the
     # OK/FAIL lines and break line-oriented consumers (grep/awk)
     spark = get_spark(
@@ -144,7 +151,6 @@ def main() -> int:
 
     from ml4logs_spark import cache
 
-    qs, oracles = entry.queries(), entry.oracle_sql()
     failed = []
     for name, fn in qs.items():
         if only and name not in only:

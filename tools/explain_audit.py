@@ -513,6 +513,18 @@ def main() -> int:
           p.count("HashAggregate") >= 2)
     check("incremental_simhash: no single-partition stage",
           "Exchange SinglePartition" not in p)
+    # 8g4b. incremental MinHash, verified: the (band, h) bucket probe
+    # and both shingle-store verify joins are equi-joins — never a cross
+    # product — and nothing funnels through one partition.
+    hist_d = docs.filter("doc_id % 2 = 0")
+    p = plan_of(dedup.incremental_near_dup_verified(
+        docs.filter("doc_id % 2 = 1"),
+        dedup.lsh_bands(dedup.minhash_signatures(hist_d)),
+        dedup.shingle_store(hist_d)))
+    check("incremental_minhash_verified: no cartesian product",
+          "CartesianProduct" not in p and "BroadcastNestedLoopJoin" not in p)
+    check("incremental_minhash_verified: no single-partition stage",
+          "Exchange SinglePartition" not in p)
     # 8g5. max_quality survivor policy (r5): the per-cluster argmax is a
     # max_by hash aggregate over the clustered set — no window function
     # over the corpus, no single-partition stage, quality scored only
